@@ -285,7 +285,7 @@ object SparkEntry {
       val n = PagesSynth.pageCount(dir)
       val table = s"graft_stored_graph_$n"
       graft.util.Warehouse.dropTable(s, table)
-      KgPipeline.writeBucketedGraph(KgPipeline.triples(s, n), table, buckets = 32)
+      new graft.pipeline.GraphSink.BucketedTable(32).write(KgPipeline.triples(s, n), table)
       val g = s.table(table)
       val edges = g.filter(col("pred") === "web:mentions")
         .select(col("subj").as("page"), col("obj_iri").as("ent")).distinct()
@@ -311,7 +311,7 @@ object SparkEntry {
       val prev = full.filter(!(col("pred") === "web:mentions" &&
         col("obj_iri").endsWith("3")))
       val target = freshTmpDir(s"graft_cdc_$n")
-      val sink = new graft.pipeline.GraphSink.Snapshotted(parts = 8)
+      val sink = new graft.pipeline.GraphSink.Snapshotted
       sink.write(prev, target)
       sink.write(full, target)
       val ids = sink.snapshots(s, target)
@@ -1908,10 +1908,10 @@ object SparkEntry {
       // shipped as a Dataset — never a driver list), read the new current
       // snapshot back. The delete is a versioned commit: older snapshots
       // still hold the rows until retention expires them (erasure =
-      // forget + expire), and the anti-join runs on the subject key the
-      // table is already partitioned by
+      // forget + compact + expire), and the read applies it as a left-anti
+      // join on the subject key the snapshot files are clustered by
       val n = PagesSynth.pageCount(dir)
-      val sink = new graft.pipeline.GraphSink.Snapshotted(8)
+      val sink = new graft.pipeline.GraphSink.Snapshotted
       val out = freshTmpDir(s"graft_forget_${new java.io.File(dir).getName}")
       sink.write(KgPipeline.decodeTriples(KgPipeline.encodedTriples(s, n), n), out)
       val takedown = s.range(0, n).filter(col("id") % 10 === 0)

@@ -21,6 +21,10 @@ import graft.model.Triple
   *  - [[GraphSink.PredicatePartitioned]] → Iceberg identity partition on
   *    `pred_ns`; planning-time partition pruning replaces the directory
   *    pruning asserted today.
+  *  - [[GraphSink.Snapshotted]] → an unpartitioned Iceberg table with
+  *    `write.distribution-mode=hash` on `subj` plus
+  *    `write.target-file-size-bytes`: the file count follows the data's
+  *    bytes, as the rebalance write does here.
   *  - [[KgPipeline.runStage]] manifests → Iceberg snapshots: the manifest's
   *    `fingerprint` maps to a snapshot summary property, its per-file row
   *    counts to the snapshot's manifest-entry metrics; resume-if-complete
@@ -98,8 +102,13 @@ object GraphSink {
     * provides). `read` resolves the current snapshot; [[readAsOf]] is
     * `VERSION AS OF`; [[snapshots]] is the snapshot log. Old snapshots stay
     * readable until an explicit expire — exactly Iceberg's retention model.
+    *
+    * Writes carry no file-count setting: they rebalance on `subj`, so AQE
+    * merges small shuffle partitions and splits large or skewed ones to
+    * `spark.sql.adaptive.advisoryPartitionSizeInBytes`, and the number of
+    * files follows the bytes written. Files stay clustered by subject.
     */
-  final class Snapshotted(parts: Int = 32) extends GraphSink {
+  final class Snapshotted extends GraphSink {
     val name = "snapshotted"
 
     private def fs(spark: SparkSession, target: String) =
@@ -137,15 +146,20 @@ object GraphSink {
           }
         } catch { case _: java.io.IOException | _: NumberFormatException => None }
       fromPtr.getOrElse {
-        val committed = snapshots(spark, target).filter(id =>
-          f.exists(new org.apache.hadoop.fs.Path(s"$target/snap=$id/_COMMITTED")))
+        val committed = snapshots(spark, target).filter(isCommitted(f, target, _))
         require(committed.nonEmpty, s"no committed snapshot at $target")
         committed.last
       }
     }
 
+    private def isCommitted(f: org.apache.hadoop.fs.FileSystem, target: String, id: Long): Boolean =
+      f.exists(new org.apache.hadoop.fs.Path(s"$target/snap=$id/_COMMITTED"))
+
+    /** Subject-clustered, byte-sized files: see the class doc. */
+    private def sized(ds: Dataset[Triple]): Dataset[Triple] = ds.hint("rebalance", col("subj"))
+
     def write(triples: Dataset[Triple], target: String): Unit = {
-      commit(triples.repartition(parts, col("subj")), target)
+      commit(sized(triples), target)
       ()
     }
 
@@ -242,26 +256,31 @@ object GraphSink {
     def read(spark: SparkSession, target: String): DataFrame =
       readAsOf(spark, target, currentId(spark, target))
 
-    /** Retention: drop all but the newest `keep` snapshots (never the
-      * current pointer's target, and never a snapshot a KEPT merge-on-read
-      * snapshot still reads through — Iceberg never expires files reachable
-      * from a live snapshot). Physical erasure of forgotten rows is
-      * therefore [[compact]] (materializing rewrite) + expire, the
-      * rewrite_data_files → expire_snapshots two-step. Time travel to an
-      * expired id fails loudly at read. */
+    /** Retention: drop all but the newest `keep` committed snapshots (never
+      * the current pointer's target, and never a snapshot a KEPT
+      * merge-on-read snapshot still reads through — Iceberg never expires
+      * files reachable from a live snapshot). A `snap=<id>` dir without the
+      * `_COMMITTED` marker never counts toward `keep`: below the current
+      * pointer it is an aborted commit and is deleted; above it, it may be a
+      * commit still in flight and is left alone. Physical erasure of
+      * forgotten rows is therefore [[compact]] (materializing rewrite) +
+      * expire, the rewrite_data_files → expire_snapshots two-step. Time
+      * travel to an expired id fails loudly at read. Returns the deleted
+      * ids, ascending. */
     def expire(spark: SparkSession, target: String, keep: Int): Seq[Long] = {
       require(keep >= 1, "must keep at least the current snapshot")
       val f = fs(spark, target)
       val cur = currentId(spark, target)
       val all = snapshots(spark, target)
-      var kept = all.takeRight(keep).toSet + cur
+      var kept = all.filter(isCommitted(f, target, _)).takeRight(keep).toSet + cur
       // transitive closure over merge-on-read base pointers
       var frontier: Set[Long] = kept
       while (frontier.nonEmpty) {
         frontier = frontier.flatMap(id => baseOf(spark, target, id)).diff(kept)
         kept ++= frontier
       }
-      val victims = all.filterNot(kept)
+      // a dir above the pointer may be a commit still in flight
+      val victims = all.filter(id => id < cur && !kept(id))
       victims.foreach { id =>
         f.delete(new org.apache.hadoop.fs.Path(s"$target/snap=$id"), true)
       }
@@ -275,8 +294,9 @@ object GraphSink {
       * O(|takedown batch|) bytes written, where the previous implementation
       * re-wrote EVERY kept row (a 100 TB store paid a full-corpus
       * copy-on-write per takedown call). [[readAsOf]] applies the sidecar
-      * as one left-anti join on the subject key the table is partitioned
-      * by (AQE broadcasts small lists); the base snapshot's files are
+      * as one left-anti join on the subject key the files are clustered by
+      * (AQE broadcasts small lists; a parquet read carries no partitioning,
+      * so a large list plans its own exchange); the base snapshot's files are
       * byte-untouched (spec-locked). The delete is versioned — auditable
       * via [[readChanges]] (pure 'delete' rows), time-travelable until
       * expiry. Physical erasure is [[compact]] (materializes the anti-join
@@ -297,20 +317,21 @@ object GraphSink {
     }
 
     /** Compaction (the OPTIMIZE / rewrite_data_files analog): rewrite the
-      * current snapshot's data into `parts` right-sized files and commit
+      * current snapshot's data into byte-sized files (the rebalance of
+      * [[write]]) and commit
       * the result as a NEW snapshot — the small-files problem is the
       * classic failure mode of high-frequency appends at 100 TB (every
       * tiny file costs a task + a metadata entry on every read). The
       * rewritten snapshot is a normal commit: same rows, old snapshots
       * untouched, time travel unaffected. Returns the new snapshot id. */
-    def compact(spark: SparkSession, target: String, compactParts: Int = 8): Long = {
+    def compact(spark: SparkSession, target: String): Long = {
       import spark.implicits._
-      commit(read(spark, target).as[Triple].repartition(compactParts, col("subj")), target)
+      commit(sized(read(spark, target).as[Triple]), target)
     }
   }
 
   /** Every layout, for parameterized round-trip tests. */
   def all(parts: Int): Seq[GraphSink] =
     Seq(new Salted(parts), new BucketedTable(parts), new PredicatePartitioned(parts),
-      new Snapshotted(parts), new NTriples.Files(parts))
+      new Snapshotted, new NTriples.Files(parts))
 }

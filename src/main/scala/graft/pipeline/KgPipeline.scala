@@ -296,26 +296,6 @@ object KgPipeline {
       pmod(xxhash64(col("pred"), coalesce(col("obj_iri"), lit("")), coalesce(col("obj_lit"), lit(""))),
         lit(saltFanout)))
 
-  /** Bucketed graph table: co-locates triples by subject so downstream
-    * subject-keyed self-joins (path queries, star expansion) run shuffle-free
-    * — the cluster-scale complement to [[saltedForWrite]] when the dominant
-    * read pattern is join-by-subject rather than balanced scan. Delegates to
-    * [[GraphSink.BucketedTable]] (the one interface all storage layouts sit
-    * behind — swap to Iceberg there without touching callers). */
-  def writeBucketedGraph(triples: Dataset[Triple], table: String, buckets: Int = 32): Unit =
-    new GraphSink.BucketedTable(buckets).write(triples, table)
-
-  /** Graph table partitioned by predicate namespace (the prefix before ':'):
-    * the third storage layout beside [[saltedForWrite]] (balanced scans) and
-    * [[writeBucketedGraph]] (co-located subject joins). Predicate families
-    * are few and heavily skewed toward `web:` — reads that filter on a
-    * family (ontology-only, mention-edges-only) prune whole directories at
-    * planning time (`PartitionFilters` at the scan), which at a 100 TB graph
-    * is the difference between a metadata lookup and a full scan. Delegates
-    * to [[GraphSink.PredicatePartitioned]]. */
-  def writePartitionedGraph(triples: Dataset[Triple], path: String, parts: Int = 32): Unit =
-    new GraphSink.PredicatePartitioned(parts).write(triples, path)
-
   /** Checkpoint-resumable stage materialization (SURVEY.md §2.7): each stage
     * writes parquet + a manifest carrying the stage fingerprint and
     * per-partition row counts (the lineage record). A later run with the

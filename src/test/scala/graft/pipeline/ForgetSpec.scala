@@ -5,8 +5,9 @@ import graft.model.Triple
 import org.apache.spark.sql.functions._
 
 /** Right-to-be-forgotten semantics on the snapshotted graph table:
-  * forget = a versioned anti-join commit (auditable, time-travelable),
-  * erasure = forget + expire (rows physically leave the store). */
+  * forget = a versioned merge-on-read delete commit (auditable,
+  * time-travelable), erasure = forget + compact + expire (rows physically
+  * leave the store). */
 class ForgetSpec extends SparkTestBase {
 
   private def freshTable() = {
@@ -17,7 +18,7 @@ class ForgetSpec extends SparkTestBase {
         Triple(s"http://ex.org/p$i", "web:mentions", s"ent:e${i % 5}", null, null))
     }
     val dir = java.nio.file.Files.createTempDirectory("forget").toString
-    val sink = new GraphSink.Snapshotted(4)
+    val sink = new GraphSink.Snapshotted
     sink.write(sp.createDataset(rows), dir)
     (sink, dir, rows)
   }
@@ -80,7 +81,7 @@ class ForgetSpec extends SparkTestBase {
     assert(sink.expire(spark, dir, keep = 1) === Seq.empty)
     assert(sink.read(spark, dir).filter(col("subj") === "http://ex.org/p0").count() === 0)
     // compact materializes the anti-join physically; expire then erases
-    val cid = sink.compact(spark, dir, compactParts = 2)
+    val cid = sink.compact(spark, dir)
     val victims = sink.expire(spark, dir, keep = 1)
     assert(victims === Seq(pre, fid))
     intercept[Exception](sink.readAsOf(spark, dir, pre).count())

@@ -111,7 +111,7 @@ class KgPipelineSpec extends SparkTestBase {
   }
 
   test("snapshotted graph sink: atomic pointer commit + time travel (VERSION AS OF analog)") {
-    val sink = new GraphSink.Snapshotted(parts = 4)
+    val sink = new GraphSink.Snapshotted
     val dir = Files.createTempDirectory("graph_snap").toString + "/g"
     val t1 = KgPipeline.triples(spark, 100)
     val t2 = KgPipeline.triples(spark, 150)
@@ -202,7 +202,7 @@ class KgPipelineSpec extends SparkTestBase {
   }
 
   test("snapshot pointer commits by rename; a torn pointer falls back to the newest complete snapshot") {
-    val sink = new GraphSink.Snapshotted(parts = 2)
+    val sink = new GraphSink.Snapshotted
     val dir = Files.createTempDirectory("graph_ptr").toString + "/g"
     val t1 = KgPipeline.triples(spark, 80)
     sink.write(t1, dir)
@@ -229,9 +229,34 @@ class KgPipelineSpec extends SparkTestBase {
       "fallback surfaced a snapshot whose commit never completed")
   }
 
+  test("expire keeps only committed snapshots; aborted dirs below the pointer are deleted") {
+    val sink = new GraphSink.Snapshotted
+    val dir = Files.createTempDirectory("graph_expire").toString + "/g"
+    val t1 = KgPipeline.triples(spark, 60)
+    val t2 = KgPipeline.triples(spark, 80)
+    sink.write(t1, dir) // snap 1
+    sink.write(t2, dir) // snap 2
+    // a writer that crashed after its parquet finished (_SUCCESS, no
+    // _COMMITTED), then a later commit that allocates the next id past it
+    t1.write.parquet(s"$dir/snap=3")
+    sink.write(t1, dir) // snap 4
+    assert(sink.snapshots(spark, dir) == Seq(1L, 2L, 3L, 4L))
+    assert(sink.currentId(spark, dir) == 4L)
+    // the aborted dir never counts toward keep: snap 2 stays, snap 3 goes
+    assert(sink.expire(spark, dir, keep = 2) == Seq(1L, 3L))
+    assert(sink.snapshots(spark, dir) == Seq(2L, 4L))
+    def canon(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    assert(canon(sink.readAsOf(spark, dir, 2L)) == canon(t2.toDF()))
+    // an unmarked dir ABOVE the pointer may be a commit still in flight:
+    // expire leaves it alone
+    t2.write.parquet(s"$dir/snap=5")
+    assert(sink.expire(spark, dir, keep = 2) == Seq.empty)
+    assert(sink.snapshots(spark, dir) == Seq(2L, 4L, 5L))
+  }
+
   test("incremental CDC read yields the exact multiset delta between snapshots; compaction's delta is empty") {
     val sps = spark; import sps.implicits._
-    val sink = new GraphSink.Snapshotted(parts = 2)
+    val sink = new GraphSink.Snapshotted
     val dir = Files.createTempDirectory("graph_cdc").toString + "/g"
     val t1 = KgPipeline.triples(spark, 100)
     val t2 = KgPipeline.triples(spark, 150) // superset corpus: first 100 pages identical
@@ -252,23 +277,29 @@ class KgPipelineSpec extends SparkTestBase {
     assert(sink.readChanges(spark, dir, 1L, 1L).count() == 0)
     // compaction rewrites files, not rows -> empty changelog
     val before = sink.currentId(spark, dir)
-    val after = sink.compact(spark, dir, compactParts = 1)
+    val after = sink.compact(spark, dir)
     assert(sink.readChanges(spark, dir, before, after).count() == 0,
       "compaction must be row-invisible to incremental consumers")
     changes.unpersist()
   }
 
   test("snapshot compaction rewrites small files as a new commit; expiry drops old snapshots") {
-    val sink = new GraphSink.Snapshotted(parts = 16) // deliberately many small files
+    val sink = new GraphSink.Snapshotted
     val dir = Files.createTempDirectory("graph_compact").toString + "/g"
     val t1 = KgPipeline.triples(spark, 150)
-    sink.write(t1, dir)
+    // a fragmented committed snapshot, laid down by hand (the sink sizes its
+    // own files from their bytes): 16 part files in snap=1, then the
+    // pointer and the committed marker, in the commit protocol's order
+    t1.repartition(16).write.parquet(s"$dir/snap=1")
+    Files.writeString(java.nio.file.Paths.get(s"$dir/_current"), "1")
+    Files.createFile(java.nio.file.Paths.get(s"$dir/snap=1/_COMMITTED"))
+    assert(sink.currentId(spark, dir) == 1L)
     def partFiles(id: Long): Int =
       new java.io.File(s"$dir/snap=$id").listFiles().count(_.getName.endsWith(".parquet"))
     val before = partFiles(1)
     assert(before > 4, s"fixture should start fragmented, had $before files")
 
-    val compacted = sink.compact(spark, dir, compactParts = 2)
+    val compacted = sink.compact(spark, dir)
     assert(compacted == 2L && sink.currentId(spark, dir) == 2L)
     def canon(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toString).sorted.toSeq
     assert(canon(sink.read(spark, dir)) == canon(t1.toDF()), "compaction must not change rows")
@@ -302,7 +333,7 @@ class KgPipelineSpec extends SparkTestBase {
 
   test("bucketed graph table makes subject self-joins shuffle-free") {
     val tr = KgPipeline.triples(spark, 200)
-    KgPipeline.writeBucketedGraph(tr, "graph_bucketed", buckets = 4)
+    new GraphSink.BucketedTable(4).write(tr, "graph_bucketed")
     val g = spark.table("graph_bucketed")
     // force the non-broadcast path so the assertion proves bucket co-location
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
@@ -322,7 +353,7 @@ class KgPipelineSpec extends SparkTestBase {
   test("predicate-partitioned graph prunes partitions at planning time") {
     val dir = java.nio.file.Files.createTempDirectory("graph_by_pred").toString
     val tr = KgPipeline.triples(spark, 200)
-    KgPipeline.writePartitionedGraph(tr, dir, parts = 4)
+    new GraphSink.PredicatePartitioned(4).write(tr, dir)
     val g = spark.read.parquet(dir)
     val q = g.filter(col("pred_ns") === "web")
     val plan = q.queryExecution.executedPlan.toString
