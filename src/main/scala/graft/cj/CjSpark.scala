@@ -43,6 +43,10 @@ object CjSpark {
     })
   }
 
+  /** Where the reference CityJSON examples are read from: the one spelling
+    * of the path shared by the contract queries, GenGolden and the specs. */
+  val referenceExamples: String = "/root/reference/examples"
+
   /** The reference example corpus as a Dataset (read-only fixtures).
     *
     * Read through the `binaryFile` source so EXECUTORS load the bytes from a
@@ -51,7 +55,7 @@ object CjSpark {
     * driver bottleneck at any real corpus). The doc IRI derives from the
     * file name, matching the golden fixtures. */
   def referenceCorpus(spark: SparkSession,
-      dir: String = "/root/reference/examples"): Dataset[CjDoc] = {
+      dir: String = referenceExamples): Dataset[CjDoc] = {
     import spark.implicits._
     spark.read.format("binaryFile")
       .option("pathGlobFilter", "*.city.json")

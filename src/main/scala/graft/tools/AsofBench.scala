@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Micro-benchmark: native sort-merge AsofJoinExec vs the composed
@@ -10,17 +9,13 @@ import org.apache.spark.sql.functions._
   */
 object AsofBench {
   def main(args: Array[String]): Unit = {
-    val cores = if (args.nonEmpty) args(0).toInt else 16
+    val cores = if (args.nonEmpty) args(0).toInt else defaultCores
     val leftN = if (args.length > 1) args(1).toLong else 2000000L
     val rightN = if (args.length > 2) args(2).toLong else 8000000L
     val keys = if (args.length > 3) args(3).toLong else 100000L
     val reps = if (args.length > 4) args(4).toInt else 3
     val payloadWidth = if (args.length > 5) args(5).toInt else 1
-    val spark = SparkSession.builder().master(s"local[$cores]")
-      .config("spark.sql.shuffle.partitions", cores)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = benchSession(cores)
 
     // deterministic scramble so neither side arrives key- or time-sorted
     val payloadCols = (0 until payloadWidth).map(i => s"payload$i")

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Micro-benchmark: native CosineExpr vs the aggregate(zip_with(...))
@@ -9,15 +8,11 @@ import org.apache.spark.sql.functions._
   */
 object CosineBench {
   def main(args: Array[String]): Unit = {
-    val cores = if (args.nonEmpty) args(0).toInt else 16
+    val cores = if (args.nonEmpty) args(0).toInt else defaultCores
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val headN = if (args.length > 2) args(2).toInt else 2000
     val reps = if (args.length > 3) args(3).toInt else 3
-    val spark = SparkSession.builder().master(s"local[$cores]")
-      .config("spark.sql.shuffle.partitions", cores)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = benchSession(cores)
     graft.functions.CosineExpr.register(spark)
 
     val e = spark.read.parquet(s"$sfDir/embeddings.parquet")

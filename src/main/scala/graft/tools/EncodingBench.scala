@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.UnsafeRow
 import graft.pipeline.KgPipeline
 
@@ -21,15 +20,9 @@ object EncodingBench {
 
   def main(args: Array[String]): Unit = {
     val pages = if (args.nonEmpty) args(0).toLong else 500000L
-    val cores = if (args.length > 1) args(1).toInt else 16
+    val cores = if (args.length > 1) args(1).toInt else defaultCores
 
-    val spark = SparkSession.builder()
-      .master(s"local[$cores]")
-      .config("spark.sql.shuffle.partitions", cores)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = benchSession(cores)
 
     def measure(df: org.apache.spark.sql.DataFrame): (Long, Long) =
       df.queryExecution.toRdd.mapPartitions { it =>

@@ -1,7 +1,6 @@
 package graft.tools
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
-import org.apache.spark.sql.SparkSession
 
 /** Generates the frozen expected-value oracles under `golden/frozen/`:
   * for pure-function queries DuckDB cannot express (simhash, winnowing
@@ -44,11 +43,7 @@ object GenFrozen {
     val sfDirs = if (dirArgs.nonEmpty) dirArgs
       else Seq("/root/testdata/sf0.001", "/root/testdata/sf0.01", "/root/testdata/sf0.1")
     val root = Paths.get("golden/frozen")
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = benchSession(8)
 
     def freeze(name: String, sfDir: String, outDir: java.nio.file.Path): Unit = {
       Files.createDirectories(outDir)

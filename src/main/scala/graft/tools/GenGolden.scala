@@ -54,7 +54,7 @@ object GenGolden {
   }
 
   def main(args: Array[String]): Unit = {
-    val examplesDir = Paths.get(if (args.nonEmpty) args(0) else "/root/reference/examples")
+    val examplesDir = Paths.get(if (args.nonEmpty) args(0) else graft.cj.CjSpark.referenceExamples)
     val outDir = Paths.get(if (args.length > 1) args(1) else "golden")
     Files.createDirectories(outDir)
 

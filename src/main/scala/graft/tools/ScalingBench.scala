@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import graft.pipeline.KgPipeline
 import graft.synth.PagesSynth
 
@@ -15,7 +14,7 @@ import graft.synth.PagesSynth
   * corpus) so the job runs long enough that fixed scheduling overhead does
   * not swamp the scaling signal.
   *
-  * Usage: runMain graft.tools.ScalingBench <cores> [sfDir] [pagesMult] [nReps] [mode]
+  * Usage: runMain graft.tools.ScalingBench [cores] [sfDir] [pagesMult] [nReps] [mode]
   * mode:
   *  - "decoded" (default): inline-synthesized corpus → string triples
   *  - "encoded": inline corpus → dictionary-encoded triples (see
@@ -24,28 +23,21 @@ import graft.synth.PagesSynth
   *    to /tmp and reused across invocations) → string triples. This is the
   *    north rule's actual job shape — the input is an Iceberg-style pages
   *    table, not an in-process generator — and it removes the generator's
-  *    allocation cost from the measurement (StageScaling shows synthesis
-  *    alone scales ~1.4x over 4x cores on a shared-DRAM box, polluting the
-  *    inline modes' high-core efficiency).
+  *    allocation cost from the measurement (synthesis alone scaled ~1.4x
+  *    over 4x cores on a shared-DRAM box, polluting the inline modes'
+  *    high-core efficiency).
   */
 object ScalingBench {
 
   def main(args: Array[String]): Unit = {
-    val cores = if (args.nonEmpty) args(0).toInt else 8
+    val cores = if (args.nonEmpty) args(0).toInt else defaultCores
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val mult = if (args.length > 2) args(2).toInt else 10
     val nReps = if (args.length > 3) args(3).toInt else 2
     val mode = if (args.length > 4) args(4) else "decoded"
     val pages = PagesSynth.pageCount(sfDir) * mult
 
-    val spark = SparkSession.builder()
-      .master(s"local[$cores]")
-      .config("spark.sql.shuffle.partitions", cores)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = benchSession(cores)
 
     // stored mode: materialize the pages table once, content-addressed by
     // (count, generator fingerprint) — the fingerprint (a page-0 content

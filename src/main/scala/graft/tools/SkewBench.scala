@@ -1,7 +1,7 @@
 package graft.tools
 
 import java.nio.file.Files
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.functions._
 import graft.model.Triple
 import graft.pipeline.KgPipeline
@@ -24,18 +24,12 @@ object SkewBench {
 
   def main(args: Array[String]): Unit = {
     val pages = if (args.nonEmpty) args(0).toLong else 2000000L
-    val cores = if (args.length > 1) args(1).toInt else 16
+    val cores = if (args.length > 1) args(1).toInt else defaultCores
     val parts = 32
 
-    val spark = SparkSession.builder()
-      .master(s"local[$cores]")
-      .config("spark.sql.shuffle.partitions", cores)
-      .config("spark.sql.session.timeZone", "UTC")
-      // AQE would coalesce/split the demo partitions; measure the raw layout
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = benchSession(cores)
+    // AQE would coalesce/split the demo partitions; measure the raw layout
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
     import spark.implicits._
 
     // planted Zipf-hot-host corpus: host 0 owns 30% of pages, the rest

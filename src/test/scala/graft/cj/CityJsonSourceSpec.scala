@@ -21,7 +21,7 @@ class GraftTestFs extends org.apache.hadoop.fs.RawLocalFileSystem {
 
 class CityJsonSourceSpec extends SparkTestBase {
 
-  private val examples = "/root/reference/examples"
+  private val examples = CjSpark.referenceExamples
 
   test("DSv2 source emits exactly the triples of the mapPartitions path, per doc") {
     val viaSource = spark.read.format("cityjson").load(examples)

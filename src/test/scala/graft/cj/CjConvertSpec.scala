@@ -144,7 +144,7 @@ class CjConvertSpec extends AnyFunSuite {
   // -- G13: parent/child closure ----------------------------------------------
 
   test("children edges come from declared children only; roots are parentless") {
-    val json = Files.readString(Paths.get("/root/reference/examples/noise_data.city.json"))
+    val json = Files.readString(Paths.get(CjSpark.referenceExamples, "noise_data.city.json"))
     val r = CjConvert.convert("cj:noise_data", json)
     def instOf(name: String) =
       r.triples.find(t => t.pred == "city.prop.id" && t.obj_lit == name).get.subj
@@ -171,7 +171,7 @@ class CjConvertSpec extends AnyFunSuite {
   // -- templates / GeometryInstance -------------------------------------------
 
   test("geometry template converts once, shared by instances; matrix gets insert point") {
-    val json = Files.readString(Paths.get("/root/reference/examples/geomtemplate.city.json"))
+    val json = Files.readString(Paths.get(CjSpark.referenceExamples, "geomtemplate.city.json"))
     val r = CjConvert.convert("cj:gt", json)
     val templates = r.triples.filter(t => t.pred == "rdf:name" && t.obj_lit.startsWith("Template "))
     assert(templates.size == 1, "template converted exactly once")

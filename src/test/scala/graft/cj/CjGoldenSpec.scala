@@ -14,7 +14,7 @@ import graft.tools.GenGolden
 class CjGoldenSpec extends AnyFunSuite {
 
   private val goldenDir = Paths.get("golden")
-  private val examplesDir = Paths.get("/root/reference/examples")
+  private val examplesDir = Paths.get(CjSpark.referenceExamples)
   private val mapper = new ObjectMapper()
 
   private def fixtures: Vector[String] =

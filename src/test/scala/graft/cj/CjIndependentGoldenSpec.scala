@@ -198,7 +198,7 @@ class CjIndependentGoldenSpec extends AnyFunSuite {
 
   private def convert(stem: String) =
     CjConvert.convert(s"cj:$stem",
-      Files.readString(Paths.get(s"/root/reference/examples/$stem.city.json")))
+      Files.readString(Paths.get(CjSpark.referenceExamples, s"$stem.city.json")))
 
   private def check(stem: String, expected: Vector[Triple], nLogs: Int): Unit = {
     val res = convert(stem)
@@ -239,7 +239,7 @@ class CjIndependentGoldenSpec extends AnyFunSuite {
   test("DenHaag instance counts match an independent raw-JSON scan") {
     val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
     val root = mapper.readTree(
-      Files.readString(Paths.get("/root/reference/examples/DenHaag_01.city.json")))
+      Files.readString(Paths.get(CjSpark.referenceExamples, "DenHaag_01.city.json")))
     val objs = root.get("CityObjects")
     val typeCounts = scala.collection.mutable.Map[String, Int]().withDefaultValue(0)
     val ids = scala.collection.mutable.Set[String]()

@@ -45,6 +45,21 @@ class IncrementalIngestSpec extends SparkTestBase {
       "streaming output must equal batch output as a multiset")
   }
 
+  test("a non-parquet file in the pages dir fails the pass loudly and leaves the graph unchanged") {
+    val root = Files.createTempDirectory("ingest_garbage").toString
+    val pagesDir = s"$root/pages"
+    val graphDir = s"$root/graph"
+    val ckpt = s"$root/ckpt"
+    PagesSynth.pages(spark, 50).write.mode("append").parquet(pagesDir)
+    IncrementalIngest.runOnce(spark, pagesDir, graphDir, ckpt)
+    val before = spark.read.parquet(graphDir).count()
+    assert(before > 0)
+
+    Files.writeString(java.nio.file.Paths.get(s"$pagesDir/garbage.parquet"), "not parquet")
+    intercept[Exception](IncrementalIngest.runOnce(spark, pagesDir, graphDir, ckpt))
+    assert(spark.read.parquet(graphDir).count() == before, "a failed pass must not change the graph")
+  }
+
   test("encoded-path ingest appends fixed-width rows exactly once, multiset-equal to the batch encoded pipeline") {
     val root = Files.createTempDirectory("ingest_enc").toString
     val pagesDir = s"$root/pages"
